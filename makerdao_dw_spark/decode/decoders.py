@@ -7,10 +7,13 @@ reference's `except KeyError: pass` left the previous iteration's table
 bound and mis-filed unknown logs into it (SURVEY.md §0 known bugs).
 
 Spark shape: the decoders are plain-python (per ~100-byte payload, cheap)
-wrapped in ONE Arrow-batched mapInPandas stage per target table, applied
-after a JVM-side topic0 filter — so Catalyst prunes/filters before any
-Python boundary is crossed, and the Python work is exactly the rows that
-belong to the table.
+and run as ONE Python pass over all target tables (`decode_tagged`): a
+topic0 dispatch dict routes each log to its spec, and the pass emits one
+tagged frame (common columns, a table tag, typed value slots) that the
+sink splits per table with JVM-only filters. A Python task costs a fixed
+~0.35 s of executor time (4-vCPU host) whatever its row count, so one
+operator for N tables replaces N. The pass runs inside the window fetch's Python operator when the plan allows,
+and otherwise behind a JVM-side topic0 filter.
 """
 
 from __future__ import annotations
@@ -19,10 +22,12 @@ from collections.abc import Iterator
 from decimal import Decimal
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..abi.schema import TableSpec
+from ..abi.schema import COMMON_FIELDS, TableSpec
 from .abi_codec import decode_abi, decode_single
 
 DECIMAL38_MAX = 10**38 - 1
@@ -125,7 +130,7 @@ def redispatch_proxy_calls(raw_logs: DataFrame, proxy_spec: TableSpec) -> DataFr
                 )
             yield pd.DataFrame(rows, columns=cols)
 
-    return matched.mapInPandas(batches, out_schema)
+    return python_map(matched, batches, out_schema)
 
 
 def _to_spark_value(typ: str, v):
@@ -149,47 +154,129 @@ def _strip0x(h: str) -> str:
     return h[2:] if h.startswith("0x") else h
 
 
-def decode_logs_for_table(raw_logs: DataFrame, spec: TableSpec) -> DataFrame:
-    """JVM-side topic0 filter -> Arrow-batched python decode -> typed DF.
+def decode_row(spec: TableSpec, topics, data_hex: str) -> list | None:
+    """One log's param values as Spark row values, or None when the log
+    does not decode as `spec` (undecodable calldata, missing indexed
+    topics, malformed payload): such a row is skipped, never mis-filed."""
+    try:
+        if spec.kind == "evt":
+            vals = decode_event(spec, list(topics), data_hex)
+        else:
+            # calls arrive as logs whose topic0 is the padded selector
+            vals = decode_calldata(spec, data_hex)
+    except (ValueError, StopIteration):
+        return None
+    if vals is None:
+        return None
+    return [_to_spark_value(t, v) for t, v in zip(spec.param_types, vals)]
+
+
+def python_map(upstream: DataFrame, fn, schema: StructType) -> DataFrame:
+    """`upstream.mapInPandas(fn, schema)` that remembers its input and
+    function, so that `decode_tagged` can run the decode in the same
+    Python operator, after `fn`, instead of in a second one."""
+    out = upstream.mapInPandas(fn, schema)
+    out._python_source = (upstream, fn)
+    return out
+
+
+COMMON_COLUMNS = [f.name for f in COMMON_FIELDS]
+RAW_COLUMNS = [*COMMON_COLUMNS, "topics", "data"]
+TABLE_TAG = "_table"
+
+
+class TaggedLayout:
+    """Row layout of the one-pass decode over a list of specs: the six
+    common columns, a table tag (the spec's index in the list) and typed
+    value slots. A spec's params fill the slots of their Spark type in
+    order, so each type has as many slots as the most that any ONE spec
+    needs, not the sum over all tables."""
+
+    def __init__(self, specs: list[TableSpec]):
+        self.specs = list(specs)
+        slot_fields: list[StructField] = []
+        by_type: dict[str, list[str]] = {}
+        self.slots: list[list[str]] = []  # per spec: slot column per param
+        for spec in self.specs:
+            used: dict[str, int] = {}
+            names = []
+            for f in spec.schema.fields[len(COMMON_FIELDS) :]:
+                key = f.dataType.simpleString()
+                k = used.get(key, 0)
+                used[key] = k + 1
+                of_type = by_type.setdefault(key, [])
+                if k == len(of_type):
+                    of_type.append(f"_s{len(slot_fields)}")
+                    slot_fields.append(StructField(of_type[k], f.dataType))
+                names.append(of_type[k])
+            self.slots.append(names)
+        self.schema = StructType([*COMMON_FIELDS, StructField(TABLE_TAG, IntegerType()), *slot_fields])
+        self._positions = [[self.schema.fieldNames().index(n) for n in names] for names in self.slots]
+        # topic0 -> spec indices (the reference's dict_sign); a log whose
+        # topic0 no spec claims is dropped
+        self.routes: dict[str, list[int]] = {}
+        for i, spec in enumerate(self.specs):
+            self.routes.setdefault(spec.signature, []).append(i)
+
+    def decode(self, batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """Raw-log frames -> tagged frames, one pass over all specs."""
+        cols = self.schema.fieldNames()
+        width = len(cols)
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                topics = r.topics
+                if topics is None or len(topics) == 0:
+                    continue
+                for i in self.routes.get(topics[0], ()):
+                    vals = decode_row(self.specs[i], topics, r.data)
+                    if vals is None:
+                        continue
+                    row = [None] * width
+                    row[:7] = (
+                        r.block_number,
+                        _strip0x(r.block_hash),
+                        _strip0x(r.address).lower(),
+                        r.log_index,
+                        r.transaction_index,
+                        _strip0x(r.transaction_hash),
+                        i,
+                    )
+                    for pos, v in zip(self._positions[i], vals):
+                        row[pos] = v
+                    rows.append(row)
+            yield pd.DataFrame(rows, columns=cols)
+
+    def table(self, tagged: DataFrame, i: int, *extra) -> DataFrame:
+        """Spec i's rows of the tagged frame in its table schema (JVM-only)."""
+        spec = self.specs[i]
+        params = [F.col(s).alias(n) for s, n in zip(self.slots[i], spec.param_names)]
+        return tagged.filter(F.col(TABLE_TAG) == i).select(*COMMON_COLUMNS, *params, *extra)
+
+
+def decode_tagged(raw_logs: DataFrame, specs: list[TableSpec]) -> tuple[TaggedLayout, DataFrame]:
+    """Topic0 dispatch + decode of every spec in ONE Python operator.
+
+    When `raw_logs` is an uncached `python_map` output (the window fetch,
+    or the proxy path's receipt filter), the decode runs inside that
+    operator's Python worker, right after its function. Otherwise a
+    JVM-side topic0 filter narrows the logs before they cross into Python.
 
     raw_logs schema (FIXTURES.md B9): address string, topics array<string>,
     data string, block_number bigint, block_hash string, log_index int,
     transaction_index int, transaction_hash string.
     """
-    sig = spec.signature
-    if spec.kind == "evt":
-        matched = raw_logs.filter(F.element_at("topics", 1) == F.lit(sig))
-    else:
-        # calls arrive as logs whose topic0 is the padded selector
-        matched = raw_logs.filter(F.element_at("topics", 1) == F.lit(sig))
+    layout = TaggedLayout(specs)
+    source = getattr(raw_logs, "_python_source", None)
+    if source is not None and raw_logs.storageLevel == StorageLevel.NONE:
+        upstream, first = source
+        return layout, upstream.mapInPandas(lambda it: layout.decode(first(it)), layout.schema)
+    matched = raw_logs.filter(F.try_element_at("topics", F.lit(1)).isin(list(layout.routes)))
+    return layout, matched.select(*RAW_COLUMNS).mapInPandas(layout.decode, layout.schema)
 
-    common = ["block_number", "block_hash", "address", "log_index", "transaction_index", "transaction_hash"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in spec.schema.fields]
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    if spec.kind == "evt":
-                        vals = decode_event(spec, list(r.topics), r.data)
-                    else:
-                        vals = decode_calldata(spec, r.data)
-                        if vals is None:
-                            continue  # undecodable calldata: skip row
-                except (ValueError, StopIteration):
-                    continue
-                rec = {
-                    "block_number": r.block_number,
-                    "block_hash": _strip0x(r.block_hash),
-                    "address": _strip0x(r.address).lower(),
-                    "log_index": r.log_index,
-                    "transaction_index": r.transaction_index,
-                    "transaction_hash": _strip0x(r.transaction_hash),
-                }
-                for name, typ, v in zip(spec.param_names, spec.param_types, vals):
-                    rec[name] = _to_spark_value(typ, v)
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return matched.select(*common, "topics", "data").mapInPandas(batches, spec.schema)
+def decode_logs_for_table(raw_logs: DataFrame, spec: TableSpec) -> DataFrame:
+    """One table's decoded rows, typed as `spec.schema`: the one-pass
+    decode over a single spec."""
+    layout, tagged = decode_tagged(raw_logs, [spec])
+    return layout.table(tagged, 0)

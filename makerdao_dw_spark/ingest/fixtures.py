@@ -11,13 +11,16 @@ duty near 1e27 ray.
 
 from __future__ import annotations
 
+import json
+import os
 import random
 
-from ..abi.loader import load_abi
 from ..abi.schema import TableSpec, compile_contract
 from .rpc import ContractSim, MockChain
 
-REF_CONF = "/root/reference/conf"
+# vat frob/grab/fold and jug's three `file` overloads (3-arg first, as
+# in the deployed jug ABI), written from the public dss signatures
+MAKER_ABI = os.path.join(os.path.dirname(os.path.abspath(__file__)), "maker_abi.json")
 
 ILKS = [
     "PSM-USDC-A", "USDC-A", "USDT-A", "ETH-A", "ETH-B", "WBTC-A",
@@ -63,8 +66,10 @@ def maker_value_gen(spec: TableSpec, rng: random.Random) -> list:
 
 
 def maker_specs() -> tuple[list[TableSpec], list[TableSpec]]:
-    vat = compile_contract("vat", load_abi(f"{REF_CONF}/makermcd/vat.abi"))
-    jug = compile_contract("jug", load_abi(f"{REF_CONF}/makermcd/jug.abi"))
+    with open(MAKER_ABI) as f:
+        abi = json.load(f)
+    vat = compile_contract("vat", abi["vat"])
+    jug = compile_contract("jug", abi["jug"])
     vat_used = [s for s in vat if s.table in ("vat_call_frob", "vat_call_grab", "vat_call_fold")]
     jug_used = [s for s in jug if s.table == "jug_call_file"]  # 3-arg overload = bare name
     assert {s.table for s in vat_used} == {"vat_call_frob", "vat_call_grab", "vat_call_fold"}

@@ -9,27 +9,31 @@ loops (/root/reference/eth-blocks.py:59-80, eth-contract.py:77-146):
   step controller (A15) exists to protect a single serial loop from
   provider caps; in the partitioned design the cap maps to window size,
   and AQE handles downstream size skew.
-- decode + demultiplex (A7-A9): one JVM-side topic filter + one
-  Arrow-batched decode stage per target table, from a cached raw-log DF.
+- decode + demultiplex (A7-A9): ONE topic0-dispatched Python pass over
+  every target table, run inside the fetch's Python operator, emits a
+  tagged frame; the sink splits it per table with JVM-only filters.
 - sink (A12/A13): parquet tables partitioned by block range
   (block_number div `partition_blocks`), written with
   dynamic-partition-overwrite so re-ingesting a range is idempotent
   (replaces A14's max-probe resume with safe re-runs; A19's
   per-range transaction becomes an atomic partition overwrite).
-- resume (A14): `resume_block` probes max(block_number)+1 across the
-  contract's tables, falling back to the creation block.
+- resume (A14): `resume_block` reads max(block_number)+1 across the
+  contract's tables from parquet footers, falling back to the creation
+  block.
 
 At 100 TB: raw logs land first as an append-only bronze table
-partitioned by block range; per-table decode reads only the new
-partitions. Window fetch is network-bound, decode is CPU-bound — both
-scale linearly with executors; the only shuffle in the whole pipeline
-is the optional proxy-dedup (dropDuplicates on transaction_hash).
+partitioned by block range; the decode reads only the new partitions.
+Window fetch is network-bound, decode is CPU-bound — both scale
+linearly with executors; the only shuffles in the whole pipeline are
+the per-table row count (a tag-keyed count, one row per table) and the
+optional proxy-dedup (dropDuplicates on transaction_hash).
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +48,7 @@ from pyspark.sql.types import (
 )
 
 from ..abi.schema import TableSpec
-from ..decode.decoders import decode_logs_for_table
+from ..decode.decoders import TABLE_TAG, decode_tagged, python_map
 from ..session import configure
 from .rpc import RpcClient
 
@@ -91,11 +95,11 @@ def backfill_blocks(
     """
     configure(spark)
     wins = _windows(from_block, to_block, step)
-    if not wins:  # empty range: repartition(0) would throw
+    if not wins:
         return spark.createDataFrame([], BLOCK_SCHEMA)
-    win_df = spark.createDataFrame(wins, "f long, t long").repartition(
-        min(len(wins), spark.sparkContext.defaultParallelism)
-    )
+    # a local list is already sliced evenly into defaultParallelism
+    # partitions; a repartition would only add a shuffle job
+    win_df = spark.createDataFrame(wins, "f long, t long")
 
     def fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in BLOCK_SCHEMA.fields]
@@ -142,11 +146,9 @@ def fetch_raw_logs(
     """
     configure(spark)
     grid = [(f, t, a) for (f, t) in _windows(from_block, to_block, step) for a in addresses]
-    if not grid:  # empty range or no addresses: repartition(0) would throw
+    if not grid:  # empty range or no addresses
         return spark.createDataFrame([], RAW_LOG_SCHEMA)
-    grid_df = spark.createDataFrame(grid, "f long, t long, addr string").repartition(
-        min(len(grid), spark.sparkContext.defaultParallelism)
-    )
+    grid_df = spark.createDataFrame(grid, "f long, t long, addr string")
 
     def fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in RAW_LOG_SCHEMA.fields]
@@ -168,7 +170,7 @@ def fetch_raw_logs(
                     )
             yield pd.DataFrame(rows, columns=cols)
 
-    raw = grid_df.mapInPandas(fetch, RAW_LOG_SCHEMA)
+    raw = python_map(grid_df, fetch, RAW_LOG_SCHEMA)
 
     if proxy_filter_address is not None:
         tx = raw.dropDuplicates(["transaction_hash"])  # A16
@@ -186,7 +188,7 @@ def fetch_raw_logs(
                 keep = [hit(h) for h in pdf["transaction_hash"]]
                 yield pdf[pd.Series(keep, index=pdf.index)]
 
-        raw = tx.mapInPandas(receipts, RAW_LOG_SCHEMA)
+        raw = python_map(tx, receipts, RAW_LOG_SCHEMA)
     return raw
 
 
@@ -197,49 +199,94 @@ def demux_and_write(
     schema_name: str,
     partition_blocks: int = 1_000_000,
     table_parallelism: int = 8,
+    mode: str = "overwrite",
 ) -> dict[str, int]:
     """Topic dispatch (A7) + decode (A8/A9) + partitioned parquet sink
     (A12/A13). Unknown topics are dropped (fixes the reference's
-    stale-dispatch bug). Returns rows written per table.
+    stale-dispatch bug). Returns rows written per table, 0 for a table
+    with no rows (which stays absent on disk: a parquet dir with no data
+    files cannot be read back schemalessly).
 
-    Per-table decode+write jobs are submitted CONCURRENTLY from a thread
-    pool: each table's job is independent (distinct topic filter,
-    distinct output path), and a contract warehouse has hundreds of
-    mostly-small tables (the reference compiles 412), so a sequential
-    loop serializes hundreds of fixed per-job overheads while the
-    cluster idles. The cached raw frame is materialized ONCE up front so
-    concurrent jobs read the cache instead of racing to populate it."""
-    spark = raw_logs.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    raw = raw_logs.persist()
+    All specs decode in one Python pass (`decode_tagged`) into a tagged
+    frame that is cached once; one JVM `groupBy(tag).count()` gives the
+    rows per table, and the non-empty tables are written CONCURRENTLY
+    from a thread pool, each a JVM-only filter + select over the cache.
+    A contract warehouse has hundreds of mostly-small tables (the
+    reference compiles 412), so neither the Python work nor the write
+    jobs may scale with the table count one after another.
+
+    mode "overwrite" replaces only the block_range partitions present in
+    the batch (dynamic partition overwrite), so re-ingesting a range is
+    idempotent; "append" suits the exactly-once streaming sink."""
+    layout, tagged = decode_tagged(raw_logs, specs)
+    tagged = tagged.persist()
     try:
-        raw.count()  # materialize the cache before fan-out
+        found = dict(tagged.groupBy(TABLE_TAG).count().collect())
+        block_range = F.expr(f"block_number div {partition_blocks}").alias("block_range")
 
-        def one_table(spec: TableSpec) -> tuple[str, int]:
-            decoded = decode_logs_for_table(raw, spec).withColumn(
-                "block_range", F.expr(f"block_number div {partition_blocks}")
+        def write(i: int) -> None:
+            path = os.path.join(out_dir, schema_name, specs[i].table)
+            (
+                layout.table(tagged, i, block_range)
+                .write.mode(mode)
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("block_range")
+                .parquet(path)
             )
-            path = os.path.join(out_dir, schema_name, spec.table)
-            decoded.persist()
-            try:
-                n = decoded.count()
-                # empty tables stay absent on disk (a parquet dir with no
-                # data files cannot be read back schemalessly); the
-                # reference instead pre-creates empty tables via DDL
-                if n > 0:
-                    decoded.write.mode("overwrite").partitionBy("block_range").parquet(path)
-                return spec.table, n
-            finally:
-                decoded.unpersist()
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        workers = max(1, min(table_parallelism, len(specs)))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            counts = dict(pool.map(one_table, specs))
-        return counts
+        if found:
+            workers = max(1, min(table_parallelism, len(found)))
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                list(pool.map(write, sorted(found)))
+        return {spec.table: found.get(i, 0) for i, spec in enumerate(specs)}
     finally:
-        raw.unpersist()
+        tagged.unpersist()
+
+
+def _footer_max(path: str, column: str) -> int | None:
+    """max(column) of one parquet file from its footer statistics; None
+    for a file without rows. Raises LookupError when a row group has
+    rows but no min/max statistics for the column."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    best = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        chunk = next((rg.column(c) for c in range(rg.num_columns) if rg.column(c).path_in_schema == column), None)
+        stats = chunk.statistics if chunk is not None else None
+        if stats is None or not stats.has_min_max:
+            raise LookupError(f"{path}: no statistics for {column}")
+        best = stats.max if best is None else max(best, stats.max)
+    return best
+
+
+def _max_block(spark: SparkSession, table_dir: str) -> int | None:
+    """max(block_number) over a table's data files, read from their
+    parquet footers (as `session._scan_splits` reads them). Only a file
+    whose footer has no statistics costs a Spark read, and a missing
+    table dir costs nothing."""
+    best = None
+    for root, dirs, files in os.walk(table_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
+            if name.startswith(("_", ".")):  # _SUCCESS, .crc: not data
+                continue
+            path = os.path.join(root, name)
+            try:
+                m = _footer_max(path, "block_number")
+            except (OSError, ValueError, LookupError):  # unreadable footer, no stats
+                try:
+                    m = spark.read.parquet(path).agg(F.max("block_number")).first()[0]
+                except Exception:
+                    # unreadable for Spark too: skip it, which can only
+                    # move the resume point back (re-ingest is idempotent)
+                    continue
+            if m is not None and (best is None or m > best):
+                best = m
+    return best
 
 
 def resume_block(
@@ -249,11 +296,7 @@ def resume_block(
     tables, else the contract's creation block."""
     start = creation_block
     for spec in specs:
-        path = os.path.join(out_dir, schema_name, spec.table)
-        try:
-            m = spark.read.parquet(path).agg(F.max("block_number")).collect()[0][0]
-        except Exception:
-            continue
+        m = _max_block(spark, os.path.join(out_dir, schema_name, spec.table))
         if m is not None and m + 1 > start:
             start = m + 1
     return start
@@ -274,7 +317,7 @@ def backfill_contract(
     proxy_filter_address: str | None = None,
 ) -> dict[str, int]:
     """End-to-end contract pipeline (the reference's eth-contract.py main
-    loop, §3.2): resume -> partitioned fetch -> decode fan-out -> sink.
+    loop, §3.2): resume -> partitioned fetch + one-pass decode -> sink.
 
     The resume point snaps DOWN to a block_range partition boundary: the
     sink overwrites whole partitions, so a partition must always be

@@ -437,25 +437,16 @@ def stream_ingest_logs(
 
     foreachBatch is the right tool: one decoded micro-batch fans out to
     N table sinks — multi-sink writes aren't expressible as a single
-    streaming sink.
+    streaming sink. Each batch goes through the batch ingest's one-pass
+    decode and writer (`demux_and_write`), in append mode.
     """
-    from ..decode.decoders import decode_logs_for_table
-    from ..ingest.pipeline import RAW_LOG_SCHEMA
+    from ..ingest.pipeline import RAW_LOG_SCHEMA, demux_and_write
     from .sources import stream_dir
 
     raw = stream_dir(spark, landing_dir, RAW_LOG_SCHEMA)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for spec in specs:
-                decoded = decode_logs_for_table(batch_df, spec).withColumn(
-                    "block_range", F.expr(f"block_number div {partition_blocks}")
-                )
-                path = os.path.join(out_dir, schema_name, spec.table)
-                decoded.write.mode("append").partitionBy("block_range").parquet(path)
-        finally:
-            batch_df.unpersist()
+        demux_and_write(batch_df, specs, out_dir, schema_name, partition_blocks, mode="append")
 
     q = (
         raw.writeStream.foreachBatch(write_batch)
